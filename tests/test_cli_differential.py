@@ -63,6 +63,14 @@ def test_malformed_csv_errors(spark):  # E7 end-to-end
         run_conversion("csv", "json", b'Name,Address\n"Unclosed,B\n', buf, spark=spark)
 
 
+def _write_big_csv(tmp_path):
+    """300 rows: splits into several scan partitions at 512-byte splits."""
+    text = "Name,Credit Limit\n" + "".join(f"P{i:04d},{i}\n" for i in range(300))
+    path = tmp_path / "big.csv"
+    path.write_text(text)
+    return str(path)
+
+
 def test_json_order_preserved_across_partitions(spark, tmp_path):
     """The rendered sinks must emit rows in input order even when the file
     splits into multiple scan partitions (__row_id ordering)."""
@@ -71,20 +79,18 @@ def test_json_order_preserved_across_partitions(spark, tmp_path):
     from ts_etl_spark.sinks.json_sink import write_json
     from ts_etl_spark.sources.csv_source import read_csv
 
-    text = "Name,Credit Limit\n" + "".join(f"P{i:04d},{i}\n" for i in range(300))
-    path = tmp_path / "big.csv"
-    path.write_text(text)
+    path = _write_big_csv(tmp_path)
 
     def render(df):
         buf = io.StringIO()
         write_json(df, buf)
         return buf.getvalue()
 
-    single = render(read_csv(spark, str(path)))
+    single = render(read_csv(spark, path))
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", "512")
-        multi_df = read_csv(spark, str(path))
+        multi_df = read_csv(spark, path)
         assert multi_df.rdd.getNumPartitions() > 1
         multi = render(multi_df)
     finally:
@@ -92,6 +98,38 @@ def test_json_order_preserved_across_partitions(spark, tmp_path):
     assert multi == single
     names = [i["Name"] for i in __import__("json").loads(single)]
     assert names == [f"P{i:04d}" for i in range(300)]
+
+
+@pytest.mark.parametrize("sink", ["json", "html", "csv"])
+def test_sinks_reject_frame_out_of_source_order(spark, tmp_path, sink):
+    """Sinks stream partitions without sorting, so a frame reordered after
+    its source is refused, not rendered in the wrong order."""
+    from ts_etl_spark import sinks
+    from ts_etl_spark.sources.csv_source import read_csv
+
+    path = _write_big_csv(tmp_path)
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "512")
+        shuffled = read_csv(spark, path).repartition(3)
+        with pytest.raises(ValueError, match="not in source order"):
+            sinks.create_sink(sink)(shuffled, io.StringIO())
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+@pytest.mark.parametrize("in_type, out_type", [("csv", "json"), ("prn", "html"), ("csv", "csv")])
+def test_conversion_runs_one_spark_job(spark, count_jobs, in_type, out_type):
+    """A single-partition file converts in exactly one Spark job: the
+    sources read their header on the driver and the sinks do not sort."""
+    from ts_etl_spark.cli import run_conversion_path
+
+    path = {"csv": CSV_FIXTURE, "prn": PRN_FIXTURE}[in_type]
+
+    def convert():
+        run_conversion_path(in_type, out_type, str(path), io.StringIO(), spark=spark)
+
+    assert count_jobs(convert) == 1
 
 
 def test_cli_path_mode_matches_stdin_mode(tmp_path):

@@ -486,6 +486,36 @@ def test_ann_entry_memoizes_vectors_and_training(spark):
     S._IVF_MEMO.clear()
 
 
+def test_memo_failure_fails_future_before_retiring_it(monkeypatch):
+    """A failed build must hand its exception to the pending future before
+    the entry leaves ``_MEMO_PENDING``: in between, a newly arriving thread
+    would find neither memo nor pending future and build again."""
+    from types import SimpleNamespace
+
+    from ts_etl_spark.operators import similarity as S
+
+    class CheckedPending(dict):
+        def pop(self, key, *default):
+            # retiring is safe once the value is memoized or the future done
+            fut = self.get(key)
+            assert fut is None or fut.done() or key in S._IVF_MEMO, (
+                "pending future retired while unresolved"
+            )
+            return super().pop(key, *default)
+
+    monkeypatch.setattr(S, "_IVF_MEMO", {})
+    monkeypatch.setattr(S, "_MEMO_PENDING", CheckedPending())
+    fake_spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app"))
+
+    def failing_build():
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        S._memo(fake_spark, "sf", "kind", failing_build)
+    assert S._memo(fake_spark, "sf", "kind", lambda: 7) == 7  # a retry builds
+    assert not S._MEMO_PENDING
+
+
 def test_pca_reduce_matches_numpy_and_preserves_structure(spark):
     """pca_reduce vs a from-scratch numpy eigendecomposition on the real
     embeddings: explained-variance spectrum matches, the projected scores

@@ -5,7 +5,7 @@ import pytest
 
 from tests.golden import CSV_FIXTURE, GOLDEN_ROWS, PRN_FIXTURE
 from ts_etl_spark.schema import EXPECTED_HEADERS, ROW_ID
-from ts_etl_spark.sources.csv_source import read_csv, validate_csv_text
+from ts_etl_spark.sources.csv_source import read_csv, split_record, validate_csv_text
 from ts_etl_spark.sources.prn_source import infer_specs, read_prn
 
 
@@ -35,16 +35,21 @@ def test_csv_custom_delimiter(spark, tmp_path):  # E1
     )
     df = read_csv(spark, write_tmp(tmp_path, "d.csv", text), delimiter=";")
     assert rows_of(df) == [GOLDEN_ROWS[0]]
+    # Spark's escaped spelling of a delimiter, as typed on a command line
+    tabbed = write_tmp(tmp_path, "t.csv", text.replace(";", "\t"))
+    assert rows_of(read_csv(spark, tabbed, delimiter="\\t")) == [GOLDEN_ROWS[0]]
 
 
 def test_csv_header_casing(spark, tmp_path):  # E2
-    text = (
-        "name,ADDRESS,postcode,pHone,Credit limit,BIRTHDAY\n"
-        "A,B,1234 ab,06-1,54.5,01/01/1987\n"
-    )
-    df = read_csv(spark, write_tmp(tmp_path, "c.csv", text))
-    assert df.columns[1:] == list(EXPECTED_HEADERS)
-    assert rows_of(df) == [("A", "B", "1234AB", "061", "54.50", "1987-01-01")]
+    # lines Spark's reader skips as blank may precede the header
+    for leading in ("", "\n\n  \n\t\n"):
+        text = leading + (
+            "name,ADDRESS,postcode,pHone,Credit limit,BIRTHDAY\n"
+            "A,B,1234 ab,06-1,54.5,01/01/1987\n"
+        )
+        df = read_csv(spark, write_tmp(tmp_path, "c.csv", text))
+        assert df.columns[1:] == list(EXPECTED_HEADERS)
+        assert rows_of(df) == [("A", "B", "1234AB", "061", "54.50", "1987-01-01")], leading
 
 
 def test_csv_missing_columns_defaulted(spark, tmp_path):  # E3
@@ -63,9 +68,33 @@ def test_csv_extra_columns_dropped(spark, tmp_path):  # E4
     assert rows_of(df) == [("A", "B", "1234AB", "061", "54.50", "1987-01-01")]
 
 
-def test_csv_header_only(spark, tmp_path):  # E6
-    df = read_csv(spark, write_tmp(tmp_path, "h.csv", "Name,Address\n"))
-    assert rows_of(df) == []
+def test_csv_header_only(spark, tmp_path):  # E6, and E5 for CSV
+    for text in ("Name,Address\n", "", "\n  \n"):
+        df = read_csv(spark, write_tmp(tmp_path, "h.csv", text))
+        assert df.columns[1:] == list(EXPECTED_HEADERS)
+        assert rows_of(df) == [], text
+
+
+@pytest.mark.parametrize(
+    "text, delimiter, want",
+    [
+        # case-insensitive duplicates: the first match wins, as documented
+        # in match_headers (Spark's own header pass renamed both columns)
+        ("Name,name,Address\nA,B,C\n", ",", ("A", "C")),
+        ("Name,,Address\nA,X,C\n", ",", ("A", "C")),  # empty header cell
+        ('"Address, full",Name,Address\nX,A,C\n', ",", ("A", "C")),
+        ('Name;"Address;2";Address\nA;X;C\n', ";", ("A", "C")),
+    ],
+    ids=["case_duplicate", "empty_cell", "quoted_comma", "quoted_semicolon"],
+)
+def test_csv_header_cells_as_written(spark, tmp_path, text, delimiter, want):
+    df = read_csv(spark, write_tmp(tmp_path, "hc.csv", text), delimiter=delimiter)
+    assert [r[:2] for r in rows_of(df)] == [want]
+
+
+def test_split_record():
+    assert split_record('a,"b,c","d""e",,f', ",") == (["a", "b,c", 'd"e', "", "f"], False)
+    assert split_record('a;;"b', ";;") == (["a", "b"], True)
 
 
 def test_csv_quoted_fields_keep_commas(spark, tmp_path):
@@ -158,9 +187,27 @@ def test_prn_non_numeric_money(spark, tmp_path):  # E13
 
 
 def test_prn_blank_lines_skipped(spark, tmp_path):  # E10/E14
-    text = "Name  Credit Limit\n\nJo    5450\n   \nBo    100\n"
-    df = read_prn(spark, write_tmp(tmp_path, "b.prn", text))
-    assert [r[0] for r in rows_of(df)] == ["Jo", "Bo"]
+    leadings = (
+        "",
+        "\n   \n\t\n",
+        # NBSP-only lines: Spark's line reader keeps them (Java trim), the
+        # reference's JS trim treats them as blank
+        "\xa0\n \xa0 \n",
+        # pushes the header past the smallest first split below
+        "\n" * 8 + "\xa0\n" * 12,
+    )
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        for split_bytes in (old, "16"):
+            spark.conf.set("spark.sql.files.maxPartitionBytes", split_bytes)
+            for leading in leadings:
+                text = leading + "Name  Credit Limit\n\nJo    5450\n   \n\xa0\nBo    100\n"
+                df = read_prn(spark, write_tmp(tmp_path, "b.prn", text))
+                if split_bytes == "16":
+                    assert df.rdd.getNumPartitions() > 1
+                assert [r[0] for r in rows_of(df)] == ["Jo", "Bo"], (split_bytes, leading)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
 def test_prn_empty_input(spark, tmp_path):  # E5
@@ -173,12 +220,38 @@ def test_prn_header_only(spark, tmp_path):  # E6
     assert rows_of(df) == []
 
 
+@pytest.mark.parametrize("reader", [read_csv, read_prn], ids=["csv", "prn"])
+def test_compressed_file_reads_like_plain(spark, tmp_path, reader):
+    """The header is read on the driver, decompressed by extension like
+    Spark's scan."""
+    import gzip
+
+    plain = str(CSV_FIXTURE if reader is read_csv else PRN_FIXTURE)
+    packed = tmp_path / ("f.csv.gz" if reader is read_csv else "f.prn.gz")
+    packed.write_bytes(gzip.compress(open(plain, "rb").read()))
+    assert rows_of(reader(spark, str(packed))) == GOLDEN_ROWS
+
+
+@pytest.mark.parametrize("reader", [read_csv, read_prn], ids=["csv", "prn"])
+def test_directory_path_rejected(spark, tmp_path, reader):
+    with pytest.raises(ValueError, match=str(tmp_path)):
+        reader(spark, str(tmp_path))
+
+
 def test_prn_data_wider_than_header(spark, tmp_path):  # E8
     # last column is capped at the header line's trimmed length
     # (prnParser.ts:76-79 + Math.min at 123-128)
     text = "Name  Birthday\nJo    19870101EXTRA\n"
     df = read_prn(spark, write_tmp(tmp_path, "wdr.prn", text))
     assert rows_of(df)[0][5] == "1987-01-01"
+
+
+@pytest.mark.parametrize("fmt", ["csv", "prn"])
+def test_create_source_runs_no_spark_job(spark, count_jobs, fmt):
+    from ts_etl_spark import sources
+
+    path = {"csv": CSV_FIXTURE, "prn": PRN_FIXTURE}[fmt]
+    assert count_jobs(lambda: sources.create_source(fmt, spark, str(path))) == 0
 
 
 def test_source_sink_registries():

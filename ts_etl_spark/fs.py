@@ -4,10 +4,15 @@ Size and existence checks resolved through the JVM FileSystem API so
 maintenance and ingest behave identically on every supported URI scheme
 (``file://``, ``hdfs://``, ``s3a://``, ...) — ``os.path`` / ``os.walk``
 silently see nothing on non-local URIs, which would make compaction
-compute total=0 and ingest treat an existing corpus as absent.
+compute total=0 and ingest treat an existing corpus as absent. The
+sources read file heads through the same API (``open_lines``), for the
+same reason.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -127,3 +132,42 @@ def count_files(spark: SparkSession, path: str, suffix: str = ".parquet") -> int
         if it.next().getPath().getName().endswith(suffix):
             n += 1
     return n
+
+
+@contextmanager
+def open_lines(spark: SparkSession, path: str) -> Iterator[Iterator[tuple[int, bytes]]]:
+    """Read the single file ``path`` line by line on the driver, with no
+    Spark job, on any URI scheme: yields an iterator of ``(byte offset,
+    line bytes)``, split by Hadoop's line reader (at ``\\n``, ``\\r\\n`` or
+    a lone ``\\r``, terminator removed) as Spark's text and CSV scans split
+    them. A compressed file is decompressed by its extension, as those
+    scans do. Lines are read as the iterator advances; leaving the
+    ``with`` block closes the file. Raises ``FileNotFoundError`` for a
+    missing path and ``ValueError`` for a directory."""
+    fs, p = hadoop_fs(spark, path)
+    if not fs.exists(p):
+        raise FileNotFoundError(f"no such file: {path}")
+    if fs.getFileStatus(p).isDirectory():
+        raise ValueError(f"expected a single file, got a directory: {path}")
+    jvm = spark._jvm
+    codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(
+        spark._jsc.hadoopConfiguration()
+    ).getCodec(p)
+    stream = fs.open(p)
+    try:
+        if codec is not None:
+            stream = codec.createInputStream(stream)
+        yield _lines(jvm, stream)
+    finally:
+        stream.close()
+
+
+def _lines(jvm, stream) -> Iterator[tuple[int, bytes]]:
+    # the line is split in the JVM and only its bytes cross to Python:
+    # py4j answers a large byte[] tens of milliseconds late
+    reader = jvm.org.apache.hadoop.util.LineReader(stream)
+    text = jvm.org.apache.hadoop.io.Text()
+    offset = 0
+    while (consumed := reader.readLine(text)) > 0:
+        yield offset, bytes(text.copyBytes())
+        offset += consumed

@@ -44,6 +44,13 @@ from ts_etl_spark.schema import (
 # ASCII-only, so NBSP/BOM are added explicitly.
 _JS_WS = "[\\s\u00a0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000\ufeff]"
 
+#: the same set as characters, for driver-side ``str.strip`` (``js_strip``)
+JS_WS_CHARS = (
+    " \t\n\r\x0b\x0c\u00a0\u1680"
+    "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a"
+    "\u2028\u2029\u202f\u205f\u3000\ufeff"
+)
+
 # JS parseFloat: optional sign, then either digits[.digits] or .digits, with
 # an optional exponent; trailing garbage is ignored; empty match → NaN.
 _FLOAT_PREFIX = r"^[+-]?(?:\d+\.?\d*(?:[eE][+-]?\d+)?|\.\d+(?:[eE][+-]?\d+)?)"
@@ -52,6 +59,11 @@ _FLOAT_PREFIX = r"^[+-]?(?:\d+\.?\d*(?:[eE][+-]?\d+)?|\.\d+(?:[eE][+-]?\d+)?)"
 def js_trim(c: Column) -> Column:
     """JS ``String.trim`` (reference normalization.ts:44)."""
     return F.regexp_replace(c, f"^{_JS_WS}+|{_JS_WS}+$", "")
+
+
+def js_strip(s: str) -> str:
+    """``js_trim`` on a Python string, for driver-side header reads."""
+    return s.strip(JS_WS_CHARS)
 
 
 def normalize_postcode(c: Column) -> Column:

@@ -758,9 +758,12 @@ def _memo(spark: SparkSession, sf_dir: str, kind: str, build):
     try:
         val = build()
     except BaseException as e:
+        # fail the future before retiring it: a thread arriving between
+        # the two would otherwise find neither memo nor pending future and
+        # start a duplicate build
+        fut.set_exception(e)
         with _MEMO_LOCK:
             _MEMO_PENDING.pop(key, None)
-        fut.set_exception(e)
         raise
     with _MEMO_LOCK:
         _IVF_MEMO[key] = val

@@ -34,9 +34,10 @@ EXPECTED_HEADERS: tuple[str, ...] = (
 DEFAULTS: dict[str, str] = {h: "" for h in EXPECTED_HEADERS}
 DEFAULTS[H_CREDIT_LIMIT] = "0.00"
 
-#: Internal bookkeeping column carrying source row order through the plan so
-#: the byte-exact sinks can restore input order (SURVEY.md §4.1: the one
-#: physical property Spark does not preserve for free).
+#: Internal bookkeeping column carrying source row order through the plan
+#: (SURVEY.md §4.1). Sources assign it with ``monotonically_increasing_id``
+#: on a narrow scan, so it increases in partition order; the byte-exact sinks
+#: stream partitions in order and reject a frame where it does not increase.
 ROW_ID = "__row_id"
 
 #: The parity-path schema: all strings, already normalized — mirrors the

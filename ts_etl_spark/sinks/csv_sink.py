@@ -9,8 +9,10 @@ wrapped in double quotes with inner quotes doubled — exactly what the CSV
 SOURCE parses back (quote='"', escape='"').
 
 Same driver split as the other rendered sinks: per-row CSV lines are
-computed DISTRIBUTED (pure codegen string expressions), only the ordered
-concatenation streams through the driver via ``toLocalIterator``.
+computed DISTRIBUTED (pure codegen string expressions), only the
+concatenation runs on the driver, which streams the frame's partitions in
+source order (``sinks.ordered``: no sort, a frame out of source order is
+rejected).
 """
 
 from __future__ import annotations
@@ -20,7 +22,8 @@ from typing import IO
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ts_etl_spark.schema import EXPECTED_HEADERS, ROW_ID
+from ts_etl_spark.schema import EXPECTED_HEADERS
+from ts_etl_spark.sinks.ordered import source_order_rows
 
 DELIM = ","
 
@@ -34,19 +37,11 @@ def _quoted(c: Column) -> Column:
     return F.when(needs, escaped).otherwise(c)
 
 
-def csv_rows(df: DataFrame) -> DataFrame:
-    """Distributed per-row CSV rendering, input-ordered."""
-    cols = [c for c in EXPECTED_HEADERS if c in df.columns]
-    out = df
-    if ROW_ID in df.columns:
-        out = out.orderBy(ROW_ID)
-    line = F.concat_ws(DELIM, *[_quoted(F.col(f"`{c}`")) for c in cols])
-    return out.select(line.alias("line"))
-
-
 def write_csv(df: DataFrame, out: IO) -> None:
     """Stream header + rows to ``out`` (text mode)."""
-    cols = [c for c in EXPECTED_HEADERS if c in df.columns]
+    present = set(df.columns)
+    cols = [c for c in EXPECTED_HEADERS if c in present]
     out.write(DELIM.join(cols) + "\n")
-    for row in csv_rows(df).toLocalIterator():
-        out.write(row["line"] + "\n")
+    line = F.concat_ws(DELIM, *[_quoted(F.col(f"`{c}`")) for c in cols])
+    for (text,) in source_order_rows(df, line):
+        out.write(text + "\n")

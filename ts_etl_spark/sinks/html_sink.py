@@ -7,8 +7,10 @@ empty input, closing tags. Values are HTML-escaped (src/utils/string.ts:1-11,
 ``&#039;`` for the single quote).
 
 Like the JSON sink, row <tr> fragments could be rendered distributed, but the
-contract is one ordered document, so rows stream through ``toLocalIterator``
-and are escaped/assembled driver-side — O(1) driver memory.
+contract is one ordered document, so rows stream to the driver in source
+order (``sinks.ordered``: the frame's own partitions, no sort, a frame out of
+source order is rejected) and are escaped/assembled there — O(1 partition)
+driver memory.
 """
 
 from __future__ import annotations
@@ -17,7 +19,8 @@ from typing import IO
 
 from pyspark.sql import DataFrame
 
-from ts_etl_spark.schema import EXPECTED_HEADERS, ROW_ID
+from ts_etl_spark.schema import EXPECTED_HEADERS
+from ts_etl_spark.sinks.ordered import source_order_rows
 
 
 def escape_html(unsafe: str) -> str:
@@ -63,14 +66,12 @@ def write_html(df: DataFrame, out: IO) -> None:
         out.write(f"        <th>{escape_html(header)}</th>\n")
     out.write("      </tr>\n    </thead>\n    <tbody>\n")
 
-    cols = [c for c in EXPECTED_HEADERS if c in df.columns]
-    ordered = df.orderBy(ROW_ID) if ROW_ID in df.columns else df
-    ordered = ordered.select(*[f"`{c}`" for c in cols])
-
+    present = set(df.columns)
+    cols = [c for c in EXPECTED_HEADERS if c in present]
     any_rows = False
-    for row in ordered.toLocalIterator():
+    for row in source_order_rows(df, *[f"`{c}`" for c in cols]):
         any_rows = True
-        d = row.asDict()
+        d = dict(zip(cols, row))
         out.write("      <tr>\n")
         for header in EXPECTED_HEADERS:
             value = d.get(header, "")

@@ -7,9 +7,10 @@ canonical key order; empty input renders ``[]`` (no newline).
 Spark-first split of the work (SURVEY.md §4.1 hard part 1):
 - per-row JSON strings are computed DISTRIBUTED via ``to_json(struct(...))``
   (Jackson, codegen; same minimal-escaping behavior as ``JSON.stringify``),
-- only the final framing/concatenation runs on the driver via
-  ``toLocalIterator`` over the id-ordered frame — O(1) driver memory,
-  no ``collect()`` of the whole dataset.
+- only the final framing/concatenation runs on the driver, which streams
+  the frame's partitions in source order (``sinks.ordered``: no sort, one
+  Spark job per partition, a frame out of source order is rejected) —
+  O(1 partition) driver memory, no ``collect()`` of the whole dataset.
 
 The contract is a single ordered text artifact, so a single writer is
 inherent to the format, not a scalability bug; the relational surface uses
@@ -23,25 +24,18 @@ from typing import IO
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ts_etl_spark.schema import EXPECTED_HEADERS, ROW_ID
-
-
-def json_rows(df: DataFrame) -> DataFrame:
-    """Distributed per-row JSON rendering, input-ordered."""
-    cols = [c for c in EXPECTED_HEADERS if c in df.columns]
-    out = df
-    if ROW_ID in df.columns:
-        out = out.orderBy(ROW_ID)
-    return out.select(
-        F.to_json(F.struct(*[F.col(f"`{c}`") for c in cols])).alias("js")
-    )
+from ts_etl_spark.schema import EXPECTED_HEADERS
+from ts_etl_spark.sinks.ordered import source_order_rows
 
 
 def write_json(df: DataFrame, out: IO) -> None:
     """Stream the framed array to ``out`` (text mode)."""
+    present = set(df.columns)
+    cols = [c for c in EXPECTED_HEADERS if c in present]
+    row_json = F.to_json(F.struct(*[F.col(f"`{c}`") for c in cols]))
     first = True
-    for row in json_rows(df).toLocalIterator():
+    for (js,) in source_order_rows(df, row_json):
         out.write("[\n  " if first else ",\n  ")
-        out.write(row["js"])
+        out.write(js)
         first = False
     out.write("[]" if first else "\n]\n")

@@ -7,9 +7,16 @@ projection with case-insensitive header matching, extra-column dropping and
 per-column defaults (csvParser.ts:30-43). All of that is native to Spark's
 CSV datasource plus one narrow ``select``:
 
-    spark.read.csv(header, delimiter, quote='"', escape='"',
-                   encoding=ISO-8859-1)            # O1+O2
-      -> select(normalize_row_exprs(matched cols))  # O3+O4+O8..O15
+    driver reads the header record from the file head  # no Spark job
+    spark.read.schema(one string per header cell)
+         .csv(header, delimiter, quote='"', escape='"',
+              encoding=ISO-8859-1)                    # O1+O2
+      -> select(normalize_row_exprs(matched cols))     # O3+O4+O8..O15
+
+The header is parsed on the driver with the reader's own rules (first line
+Spark does not skip as blank, same delimiter and quoting), so the names
+stay exactly as written and no schema-inference job runs; Spark drops the
+header line itself (``header=True``). Building the frame launches no job.
 
 Scale notes: the scan is splittable (multiLine=False by default), all
 normalization is a single whole-stage-codegen projection, and column pruning
@@ -21,9 +28,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ts_etl_spark.fs import open_lines
 from ts_etl_spark.functions.normalize import normalize_row_exprs
 from ts_etl_spark.schema import EXPECTED_HEADERS, ROW_ID
+
+#: Java ``String.trim`` strips every char up to U+0020
+_JAVA_TRIM = "".join(map(chr, range(0x21)))
 
 
 def match_headers(actual: list[str]) -> dict[str, str]:
@@ -41,6 +53,89 @@ def match_headers(actual: list[str]) -> dict[str, str]:
     return out
 
 
+def reader_skips(line: str) -> bool:
+    """Spark's line-mode CSV reader drops a line whose Java ``String.trim``
+    is empty, before header handling and before ids are assigned."""
+    return not line.strip(_JAVA_TRIM)
+
+
+def split_record(text: str, delimiter: str) -> tuple[list[str], bool]:
+    """Cells of one CSV record with the reader's quoting (quote and escape
+    both ``"``; a quote opens a quoted cell only at the start of a cell),
+    and whether ``text`` ends inside an open quote."""
+    cells: list[str] = []
+    cell: list[str] = []
+    in_quotes, at_start = False, True
+    i, n = 0, len(text)
+    while i < n:
+        ch = text[i]
+        if in_quotes:
+            if ch == '"' and text.startswith('"', i + 1):
+                cell.append('"')
+                i += 1
+            elif ch == '"':
+                in_quotes = False
+            else:
+                cell.append(ch)
+            i += 1
+        elif text.startswith(delimiter, i):
+            cells.append("".join(cell))
+            cell, at_start = [], True
+            i += len(delimiter)
+        else:
+            if ch == '"' and at_start:
+                in_quotes = True
+            else:
+                cell.append(ch)
+            at_start = False
+            i += 1
+    cells.append("".join(cell))
+    return cells, in_quotes
+
+
+def read_header(
+    spark: SparkSession,
+    path: str,
+    delimiter: str = ",",
+    encoding: str = "ISO-8859-1",
+    multi_line: bool = False,
+) -> list[str] | None:
+    """Header cells of the CSV file ``path`` as Spark's reader takes them
+    with ``header=True``: the first line it does not skip as blank, split
+    with the source's delimiter and quote rules (``multi_line`` lets a
+    quoted cell span lines). ``None`` when the file has no such line.
+    Reads the file head on the driver; no Spark job."""
+    if "\\" in delimiter:  # Spark's escapes such as "\\t"
+        delimiter = spark._jvm.org.apache.spark.sql.catalyst.csv.CSVExprUtils.toDelimiterStr(
+            delimiter
+        )
+    record = None
+    with open_lines(spark, path) as lines:
+        for _, raw in lines:
+            line = raw.decode(encoding, "replace")
+            if record is None and reader_skips(line):
+                continue
+            record = line if record is None else f"{record}\n{line}"
+            cells, open_quote = split_record(record, delimiter)
+            if not (multi_line and open_quote):
+                return cells
+    return None if record is None else cells
+
+
+def _field_names(header: list[str]) -> list[str]:
+    """Unique schema names, one per header cell: the cell itself where it
+    is non-empty and unique ignoring case (so Spark's header check finds
+    what it reads), else the positional ``_c<i>``."""
+    lowered = [h.lower() for h in header]
+    names = [
+        h if h and lowered.count(h.lower()) == 1 else f"_c{i}"
+        for i, h in enumerate(header)
+    ]
+    if len({n.lower() for n in names}) < len(names):
+        names = [f"_c{i}" for i in range(len(header))]
+    return names
+
+
 def read_csv(
     spark: SparkSession,
     path: str,
@@ -49,27 +144,31 @@ def read_csv(
     multi_line: bool = False,
     with_row_id: bool = True,
 ) -> DataFrame:
-    """Read a CSV file into the canonical normalized 6-column string frame.
+    """Read the CSV file ``path`` into the canonical normalized 6-column
+    string frame. Building the frame runs no Spark job: the header comes
+    from ``read_header`` and the scan has an explicit all-string schema.
 
-    ``with_row_id`` appends a ``__row_id`` column carrying source order for
-    the byte-exact sinks (SURVEY.md §4.1). Ids are assigned per input split;
-    for the single-blob CLI path this is exactly input order.
+    ``with_row_id`` prepends ``__row_id`` (``monotonically_increasing_id``
+    on the narrow scan), so ids increase in partition order and partition
+    order is file order: the order contract the rendered sinks check.
     """
+    header = read_header(spark, path, delimiter, encoding, multi_line) or []
+    names = _field_names(header)
     raw = (
-        spark.read.option("header", True)
+        spark.read.schema(T.StructType([T.StructField(n, T.StringType()) for n in names]))
+        .option("header", True)
         .option("delimiter", delimiter)
         .option("quote", '"')
         .option("escape", '"')  # RFC4180 doubled quotes, like csv-parse
         .option("encoding", encoding)
         .option("multiLine", multi_line)
-        .option("inferSchema", False)
         .option("ignoreLeadingWhiteSpace", False)
         .option("ignoreTrailingWhiteSpace", False)
-        .option("enforceSchema", False)
         .csv(path)
     )
-    mapping = match_headers(raw.columns)
-    exprs = normalize_row_exprs({h: F.col(f"`{a}`") for h, a in mapping.items()})
+    exprs = normalize_row_exprs(
+        {h: F.col(f"`{names[header.index(a)]}`") for h, a in match_headers(header).items()}
+    )
     if with_row_id:
         exprs = [F.monotonically_increasing_id().alias(ROW_ID), *exprs]
     return raw.select(exprs)

@@ -27,20 +27,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from ts_etl_spark.functions.normalize import js_strip
 from ts_etl_spark.sources.prn_source import ColumnSpec, infer_specs
 
-#: JS String.trim whitespace (same set as functions.normalize._JS_WS)
-_JS_WS_CHARS = (
-    " \t\n\r\x0b\x0c  "
-    "           "
-    "    　﻿"
-)
-
 DEFAULT_PARTITION_BYTES = 32 * 1024 * 1024
-
-
-def _py_js_trim(s: str) -> str:
-    return s.strip(_JS_WS_CHARS)
 
 
 def _slice_line(line: str, spec: ColumnSpec) -> str:
@@ -48,7 +38,7 @@ def _slice_line(line: str, spec: ColumnSpec) -> str:
     slices yield '' exactly like the JS guard."""
     if spec.start >= len(line):
         return ""
-    return _py_js_trim(line[spec.start : spec.end])
+    return js_strip(line[spec.start : spec.end])
 
 
 @dataclass
@@ -106,7 +96,7 @@ class PrnDataSourceReader(DataSourceReader):
                 if line_start >= part.end:
                     break
                 line = raw.decode(part.encoding).rstrip("\r\n")
-                if not _py_js_trim(line):
+                if not js_strip(line):
                     continue  # blank-line filter (O7)
                 yield tuple(_slice_line(line, s) for s in part.specs)
 
@@ -119,7 +109,7 @@ def _header_specs(path: str, encoding: str):
             if not raw:
                 return [], 0
             line = raw.decode(encoding).rstrip("\r\n")
-            if _py_js_trim(line):
+            if js_strip(line):
                 return infer_specs(line), f.tell()
 
 

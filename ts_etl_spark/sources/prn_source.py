@@ -9,11 +9,12 @@ Credit Limit is stored as integer cents and pre-scaled to units
 
 Spark has no fixed-width reader, so the adapter is:
 
+    driver reads the file head up to the first non-blank line
+        -> ColumnSpec list + the header's ``__row_id`` (no Spark job;
+         the reference does the same single-pass header specialization;
+         the spans become `substring` literals Catalyst constant-folds)
     spark.read.csv(sep='\\x01', quote disabled, encoding=ISO-8859-1)
         -> one string column per line (splittable, latin1-correct)
-    driver inspects the first non-blank line -> ColumnSpec list
-        (the reference does the same single-pass header specialization;
-         the spans become `substring` literals Catalyst constant-folds)
     data lines -> select(substring/trim per span) -> normalize_row_exprs
 
 Line assembly (reference O6, _transform/_flush chunk re-buffering) is free:
@@ -29,8 +30,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ts_etl_spark.functions.normalize import js_trim, normalize_row_exprs
+from ts_etl_spark.fs import open_lines
+from ts_etl_spark.functions.normalize import js_strip, js_trim, normalize_row_exprs
 from ts_etl_spark.schema import EXPECTED_HEADERS, H_CREDIT_LIMIT, ROW_ID
+from ts_etl_spark.sources.csv_source import reader_skips
 
 #: leading-integer prefix, JS ``parseInt(v, 10)`` semantics
 _INT_PREFIX = r"^[+-]?\d+"
@@ -122,31 +125,69 @@ def _read_lines(spark: SparkSession, path: str, encoding: str) -> DataFrame:
     )
 
 
+def _read_header(
+    spark: SparkSession, path: str, encoding: str
+) -> tuple[str, int, int] | None:
+    """The header line of the PRN file ``path`` (its first non-blank line,
+    reference handleLine, prnParser.ts:148-158), the number of lines before
+    it that the line reader still emits (blank to ``js_trim``, not to
+    Java's ``trim``, e.g. NBSP-only lines) and its byte offset. ``None``
+    when every line is blank. Reads the file head on the driver."""
+    emitted = 0
+    with open_lines(spark, path) as lines:
+        for offset, raw in lines:
+            line = raw.decode(encoding, "replace")
+            if reader_skips(line):
+                continue
+            if js_strip(line):
+                return line, emitted, offset
+            emitted += 1
+    return None
+
+
+def _in_first_split(spark: SparkSession, offset: int) -> bool:
+    """Whether the line starting at byte ``offset`` is read by the first
+    scan partition under every split size the session can choose: Spark
+    never splits a file below min(maxPartitionBytes, openCostInBytes)."""
+    if offset == 0:
+        return True
+    conf = spark._jsparkSession.sessionState().conf()
+    return offset < min(conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes())
+
+
 def read_prn(
     spark: SparkSession,
     path: str,
     encoding: str = "ISO-8859-1",
     with_row_id: bool = True,
 ) -> DataFrame:
-    """Read a PRN fixed-width file into the canonical normalized frame.
+    """Read the PRN fixed-width file ``path`` into the canonical normalized
+    frame.
 
     The header is the first non-blank line (reference handleLine,
     prnParser.ts:148-158 skips blanks before the header); everything after
-    it is data; blank data lines are dropped (O7)."""
+    it is data; blank data lines are dropped (O7). The header is read on
+    the driver, so building the frame runs no Spark job, unless blank lines
+    push the header past the smallest first split Spark may choose; then
+    one small job finds the header's ``__row_id``.
+
+    ``__row_id`` is ``monotonically_increasing_id`` on the narrow line
+    scan: ids increase in partition order and partition order is file
+    order, the order contract the rendered sinks check."""
+    head = _read_header(spark, path, encoding)
+    if head is None:
+        return empty_canonical(spark, with_row_id)
+    header_line, emitted_before, offset = head
     lines = _read_lines(spark, path, encoding).select(
         F.monotonically_increasing_id().alias(ROW_ID), "line"
     )
-    # Driver-side header fetch: one tiny job reading the file head — the
-    # same "prepared plan" specialization the reference does once per run.
-    head = (
-        lines.filter(js_trim(F.col("line")) != "")
-        .orderBy(ROW_ID)
-        .limit(1)
-        .collect()
-    )
-    if not head:
-        return empty_canonical(spark, with_row_id)
-    header_id, header_line = head[0][0], head[0][1]
+    if _in_first_split(spark, offset):
+        # the first partition's ids count its rows from 0
+        header_id = emitted_before
+    else:
+        header_id = (
+            lines.filter(js_trim(F.col("line")) != "").agg(F.min(ROW_ID)).first()[0]
+        )
     specs = infer_specs(header_line)
 
     data = lines.filter(
